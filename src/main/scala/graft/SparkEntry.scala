@@ -726,49 +726,30 @@ object SparkEntry {
     * raw jaccard, `pairs_all` is the minJaccard=0 list (q14's
     * contract) and `pairs05` the raw >= 0.5 cut (q40/q86/q110's) —
     * exactly the frame a direct minJaccard=0.5 call yields, since the
-    * filter runs on the RAW value before 6dp rounding. Content-keyed
-    * like the IVF/PQ seams (see [[dirCacheKey]]), so a corpus edit
-    * regenerates; parquet round-trips doubles bit-exactly.
-    */
-  private def dupGraphPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-dupgraph-${dirCacheKey(s, dir, "documents")}"
-
-  private val dupGraphCache =
-    collection.mutable.Map.empty[String, (DataFrame, DataFrame, DataFrame)]
-
-  /** (pairs_all, pairs05, clusters) at the shared cap, built + persisted
-    * once per corpus snapshot (the q28/q65 build-once discipline).
+    * filter runs on the RAW value before 6dp rounding. A build-once
+    * [[Fixture]] keyed on `documents`, so a corpus edit regenerates;
+    * parquet round-trips doubles bit-exactly.
     */
   private def dupGraphFor(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    dupGraphCache.synchronized {
-      val path = dupGraphPathFor(s, dir)
-      dupGraphCache.getOrElseUpdate(path, {
-        val marker = new org.apache.hadoop.fs.Path(path, "DUPGRAPH_FORMAT")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          val t0 = System.nanoTime()
-          // one LSH candidate + shingle-verify pass; the barrier keeps
-          // the two table writes from re-running it
-          val all = Dedup.nearDupPairs(rdWide(s, dir, "documents"),
-              minJaccard = 0.0, maxBucketSize = 64, keepRawJaccard = true)
-            .localCheckpoint(eager = true)
-          all.drop("raw_jaccard")
-            .write.mode("overwrite").parquet(s"$path/pairs_all")
-          all.filter(col("raw_jaccard") >= 0.5).drop("raw_jaccard")
-            .write.mode("overwrite").parquet(s"$path/pairs05")
-          graft.dedup.DupClusters.clusters(s.read.parquet(s"$path/pairs05"))
-            .write.mode("overwrite").parquet(s"$path/clusters")
-          all.unpersist()
-          fs.create(marker, true).close()
-          System.err.println(
-            f"[graft] dup pair graph build+persist ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        (s.read.parquet(s"$path/pairs_all"),
-          s.read.parquet(s"$path/pairs05"),
-          s.read.parquet(s"$path/clusters"))
-      })
+      : (DataFrame, DataFrame, DataFrame) = {
+    val path = Fixture.dir(s, dir, "documents", "dupgraph") { path =>
+      // one LSH candidate + shingle-verify pass; the barrier keeps
+      // the two table writes from re-running it
+      val all = Dedup.nearDupPairs(rdWide(s, dir, "documents"),
+          minJaccard = 0.0, maxBucketSize = 64, keepRawJaccard = true)
+        .localCheckpoint(eager = true)
+      all.drop("raw_jaccard")
+        .write.mode("overwrite").parquet(s"$path/pairs_all")
+      all.filter(col("raw_jaccard") >= 0.5).drop("raw_jaccard")
+        .write.mode("overwrite").parquet(s"$path/pairs05")
+      graft.dedup.DupClusters.clusters(s.read.parquet(s"$path/pairs05"))
+        .write.mode("overwrite").parquet(s"$path/clusters")
+      all.unpersist()
     }
+    Fixture.memo(path)((s.read.parquet(s"$path/pairs_all"),
+      s.read.parquet(s"$path/pairs05"),
+      s.read.parquet(s"$path/clusters")))
+  }
 
   /** Embedding-cosine near-dup pairs within sign-LSH buckets. */
   private def qEmbedNearDup(s: SparkSession, dir: String): DataFrame =
@@ -810,63 +791,24 @@ object SparkEntry {
     * run — bench passes 2..n, repeated verify calls — reopens it with
     * `Ann.readIvf` and pays only the partition-pruned probe. This is the
     * production split: at 100 TB the quantizer is trained by an indexing
-    * job, not inside every query. Cache lives under java.io.tmpdir keyed
-    * by the data dir (container-lifetime; a fresh container retrains).
-    * Build time is logged to stderr so the bench JSON's q28 number is
-    * probe-only while the build cost stays observable (PERF.md).
+    * job, not inside every query. The index is a [[Fixture]] dir keyed
+    * on `embeddings`; [[Fixture.dir]] logs the build time to stderr so
+    * the bench JSON's q28 number is probe-only while the build cost
+    * stays observable (PERF.md).
     */
-  private val ivfIndexCache =
-    collection.mutable.Map.empty[String, Ann.IvfIndex]
-
-  /** Cache key for a data dir, so a dir whose parquet is regenerated in
-    * place gets a NEW cache entry instead of being served stale
-    * build-once artifacts. The source table may be a single parquet
-    * file OR a directory-style table whose top-level size/mtime don't
-    * change on in-place part-file rewrites, so the key hashes every
-    * LEAF file's (name, length, mtime) via the Hadoop FS. A missing
-    * path is an error, never a constant key.
-    */
-  private def dirCacheKey(s: SparkSession, dir: String, table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"dirCacheKey: $p does not exist")
-    val leaves = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true) // recursive; a plain file lists itself
-    while (it.hasNext) {
-      val st = it.next()
-      leaves += s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}"
+  private def ivfIndexDir(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "embeddings", "ivf") { path =>
+      // maxIter 4 + seeded random init: a usable coarse quantizer,
+      // not a converged one — the k-means|| init jobs dominate
+      // training cost otherwise
+      Ann.writeIvf(Ann.buildIvf(rd(s, dir, "embeddings"),
+        nCentroids = 16, seed = 42L, maxIter = 4, initMode = "random"), path)
     }
-    val raw = s"$dir|${leaves.sorted.mkString(";")}"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+
+  private def ivfIndexFor(s: SparkSession, dir: String): Ann.IvfIndex = {
+    val path = ivfIndexDir(s, dir)
+    Fixture.memo(path)(Ann.readIvf(s, path))
   }
-
-  /** On-disk home of the q28 persisted index for a data dir (see
-    * [[dirCacheKey]] for the regeneration-proof key).
-    */
-  private def ivfPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-ivf-${dirCacheKey(s, dir, "embeddings")}"
-
-  private def ivfIndexFor(s: SparkSession, dir: String): Ann.IvfIndex =
-    ivfIndexCache.synchronized {
-      val path = ivfPathFor(s, dir)
-      ivfIndexCache.getOrElseUpdate(path, {
-        val marker = new org.apache.hadoop.fs.Path(path, "IVF_FORMAT")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          // maxIter 4 + seeded random init: a usable coarse quantizer,
-          // not a converged one — the k-means|| init jobs dominate
-          // training cost otherwise
-          val t0 = System.nanoTime()
-          val built = Ann.buildIvf(rd(s, dir, "embeddings"),
-            nCentroids = 16, seed = 42L, maxIter = 4, initMode = "random")
-          Ann.writeIvf(built, path)
-          System.err.println(
-            f"[graft] q28 IVF build+persist ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        Ann.readIvf(s, path)
-      })
-    }
 
   /** The user-written exact top-k over the persisted q28 index's `lists`
     * layout — the frame [[qIvfProbeTopK]] executes with the rewrite on,
@@ -878,10 +820,9 @@ object SparkEntry {
     */
   private[graft] def ivfProbeTopKFrame(s: SparkSession, dir: String,
                                        k: Int = 10): DataFrame = {
-    ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
     val qVec = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    Ann.listsFrame(s, ivfPathFor(s, dir))
+    Ann.listsFrame(s, ivfIndexDir(s, dir))
       .withColumn("score", graft.functions.CosineSimilarity(
         col("embedding"), array(qVec.map(lit): _*)))
       .orderBy(col("score").desc, col("vec_id").asc)
@@ -896,11 +837,10 @@ object SparkEntry {
     */
   private[graft] def ivfBatchProbeFrame(s: SparkSession, dir: String,
                                         nprobe: Int): DataFrame = {
-    ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
     val queries = rd(s, dir, "embeddings").filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("query_vec"))
-    Ann.ivfSearchBatch(s, ivfPathFor(s, dir), queries, k = 10, nprobe = nprobe)
+    Ann.ivfSearchBatch(s, ivfIndexDir(s, dir), queries, k = 10, nprobe = nprobe)
   }
 
   /** Batched-serving gate (VERDICT r14 item 5): [[graft.search.Ann
@@ -930,7 +870,6 @@ object SparkEntry {
     */
   private[graft] def textServingFrame(s: SparkSession, dir: String,
                                       nprobe: Int = 16): DataFrame = {
-    ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
     val embedder = new graft.embed.Md5TokenEmbedder()
     val panel = s.createDataFrame(Seq(
       (0L, "alpha beta gamma"),
@@ -941,7 +880,7 @@ object SparkEntry {
     val queries = panel.select(col("query_id"),
       graft.embed.Embedder.embedDoubleColumn(col("query_text"), embedder)
         .as("query_vec"))
-    Ann.ivfSearchBatch(s, ivfPathFor(s, dir), queries, k = 10, nprobe = nprobe)
+    Ann.ivfSearchBatch(s, ivfIndexDir(s, dir), queries, k = 10, nprobe = nprobe)
   }
 
   /** Text-query serving gate: [[textServingFrame]] at nprobe = 16 — all
@@ -964,10 +903,9 @@ object SparkEntry {
     */
   private[graft] def filteredAnnFrame(s: SparkSession, dir: String,
                                       nprobe: Int): DataFrame = {
-    ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
     val qVec = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    Ann.ivfSearchFiltered(s, ivfPathFor(s, dir), qVec,
+    Ann.ivfSearchFiltered(s, ivfIndexDir(s, dir), qVec,
       pred = col("label") === 3, k = 10, nprobe = nprobe)
   }
 
@@ -992,11 +930,10 @@ object SparkEntry {
     */
   private[graft] def filteredBatchProbeFrame(s: SparkSession, dir: String,
                                              nprobe: Int): DataFrame = {
-    ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
     val queries = rd(s, dir, "embeddings").filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("query_vec"))
-    Ann.ivfSearchBatch(s, ivfPathFor(s, dir), queries, k = 10,
+    Ann.ivfSearchBatch(s, ivfIndexDir(s, dir), queries, k = 10,
       nprobe = nprobe, pred = Some(col("label") === 3))
   }
 
@@ -1044,7 +981,7 @@ object SparkEntry {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("query_vec"))
-    val ann = Ann.ivfSearchBatch(s, ivfPathFor(s, dir), queries,
+    val ann = Ann.ivfSearchBatch(s, ivfIndexDir(s, dir), queries,
         k = 10, nprobe = 2)
       .select(col("query_id"), col("vec_id"), col("rank").as("ann_rank"))
     val exact = Search.topKBatch(emb, queries, k = 10,
@@ -1077,13 +1014,6 @@ object SparkEntry {
   private val NdcgIdcg10: Double =
     (1 to 10).map(i => (11.0 - i) * NdcgWeights(i - 1)).sum
 
-  /** On-disk home of the q214 DELETE-exercised index copy — a scratch
-    * clone of the q28 index so tombstones never touch the shared seam
-    * that q28/q193/q205/q210/q212/q213 probe.
-    */
-  private def ivfDeletePathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-ivfdel-${dirCacheKey(s, dir, "embeddings")}"
-
   /** The ids q214 deletes: a fixed, scale-independent panel (query
     * vector vec_id 0 among them, so the gate also proves a deleted
     * row's own vector can no longer retrieve it).
@@ -1091,27 +1021,14 @@ object SparkEntry {
   private val DeletedVecIds: Seq[Long] = Seq(0L, 7L, 14L, 21L, 28L)
 
   /** Build-once clone of the persisted q28 index with [[DeletedVecIds]]
-    * tombstoned (content-keyed like every seam; the tombstone write is
-    * part of the one-time build, so repeat touches never re-append).
+    * tombstoned — a scratch copy so tombstones never touch the shared
+    * seam that q28/q193/q205/q210/q212/q213 probe. The tombstone write
+    * is part of the one-time build, so repeat touches never re-append.
     */
   private def ivfDeleteIndexFor(s: SparkSession, dir: String): String =
-    ivfIndexCache.synchronized {
-      val path = ivfDeletePathFor(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(path, "IVF_FORMAT")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        ivfIndexFor(s, dir) // ensure the source index exists
-        val t0 = System.nanoTime()
-        Ann.writeIvf(Ann.readIvf(s, ivfPathFor(s, dir)), path)
-        Ann.deleteFromIvf(s, path, DeletedVecIds)
-        System.err.println(
-          f"[graft] q214 delete-index clone+tombstone ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      } else if (Ann.readIvfManifest(s, path).tombstones.isEmpty) {
-        // writeIvf's marker landed but the process died before the
-        // tombstone append — re-delete rather than serve undeleted rows
-        Ann.deleteFromIvf(s, path, DeletedVecIds)
-      }
-      path
+    Fixture.dir(s, dir, "embeddings", "ivfdel") { path =>
+      Ann.writeIvf(Ann.readIvf(s, ivfIndexDir(s, dir)), path)
+      Ann.deleteFromIvf(s, path, DeletedVecIds)
     }
 
   /** The batched probe over the TOMBSTONED index copy, exposed
@@ -1142,39 +1059,18 @@ object SparkEntry {
     ivfDeleteProbeFrame(s, dir, nprobe = 16)
       .select(col("query_id"), col("vec_id"), col("rank"), col("score"))
 
-  /** On-disk home of the q215 UPSERT-exercised index clone (the q214
-    * discipline: mutations never touch the shared q28 seam).
-    */
-  private def ivfUpsertPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-ivfup-${dirCacheKey(s, dir, "embeddings")}"
-
-  /** Build-once clone of the q28 index with ONE row upserted: vec_id 0's
+  /** Build-once clone of the q28 index with ONE row upserted (the q214
+    * discipline: mutations never touch the shared q28 seam): vec_id 0's
     * embedding is REPLACED by the reverse of vec_id 1's (deterministic,
-    * arithmetic-free — both engines copy the same floats). Upsert is
-    * idempotent (replace-again is a no-op), so the crash window between
-    * the clone write and the upsert is closed by re-upserting whenever
-    * the done-marker is missing.
+    * arithmetic-free — both engines copy the same floats).
     */
   private def ivfUpsertIndexFor(s: SparkSession, dir: String): String =
-    ivfIndexCache.synchronized {
-      val path = ivfUpsertPathFor(s, dir)
-      val marker = new org.apache.hadoop.fs.Path(path, "IVF_FORMAT")
-      val done = new org.apache.hadoop.fs.Path(path, "UPSERT_DONE")
-      val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker) || !fs.exists(done)) {
-        ivfIndexFor(s, dir) // ensure the source index exists
-        val t0 = System.nanoTime()
-        if (!fs.exists(marker))
-          Ann.writeIvf(Ann.readIvf(s, ivfPathFor(s, dir)), path)
-        val donor = rd(s, dir, "embeddings").filter(col("vec_id") === 1)
-          .select(lit(0L).as("vec_id"), reverse(col("embedding")).as("embedding"),
-            col("label"))
-        Ann.upsertIntoIvf(s, path, donor)
-        fs.create(done, true).close()
-        System.err.println(
-          f"[graft] q215 upsert-index clone+upsert ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      path
+    Fixture.dir(s, dir, "embeddings", "ivfup") { path =>
+      Ann.writeIvf(Ann.readIvf(s, ivfIndexDir(s, dir)), path)
+      val donor = rd(s, dir, "embeddings").filter(col("vec_id") === 1)
+        .select(lit(0L).as("vec_id"), reverse(col("embedding")).as("embedding"),
+          col("label"))
+      Ann.upsertIntoIvf(s, path, donor)
     }
 
   /** The batched probe over the UPSERTED index clone, exposed
@@ -1638,44 +1534,28 @@ object SparkEntry {
   /** Build-once / probe-many seam for the PQ family (VERDICT r14 item 3
     * — the q28 discipline extended to the plain-PQ quantizer): codebooks
     * + codes are trained ONCE per data dir, persisted with
-    * [[graft.search.Ann.writePq]] under a [[dirCacheKey]]-keyed tmpdir
-    * path, and every later q65/q203 run — in this session via the JVM
-    * cache, in the NEXT session via the on-disk store — reopens them
-    * with readPq and pays read-cost only. Both queries were
+    * [[graft.search.Ann.writePq]] into a [[Fixture]] dir keyed on
+    * `embeddings`, and every later q65/q203 run — in this session via
+    * the JVM memo, in the NEXT session via the on-disk store — reopens
+    * them with readPq and pays read-cost only. Both queries were
     * training-dominated (12.8 / 16.8 s at 100×; the scan itself is one
-    * pass). The `PQ_FORMAT` marker is stamped only after both artifacts
-    * land, so a crashed build is rebuilt, never half-read; a data-dir
-    * whose parquet is regenerated in place gets a NEW path (the key
-    * hashes every leaf file's name/length/mtime), so stale codebooks
-    * cannot be served — PqStorageSpec pins both properties.
+    * pass). A data-dir whose parquet is regenerated in place gets a NEW
+    * path, so stale codebooks cannot be served — PqStorageSpec pins it.
     *
     * m=2/maxIter 2/random init: a usable demo quantizer, not a converged
     * one — per-subspace training cost dominates even the BUILD otherwise
     * (each subspace is one spark.ml KMeans fit).
     */
-  private val pqCache = collection.mutable.Map.empty[String, Ann.PqIndex]
-
   private[graft] def pqPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-pq-${dirCacheKey(s, dir, "embeddings")}"
-
-  private[graft] def pqIndexFor(s: SparkSession, dir: String): Ann.PqIndex =
-    pqCache.synchronized {
-      val path = pqPathFor(s, dir)
-      pqCache.getOrElseUpdate(path, {
-        val marker = new org.apache.hadoop.fs.Path(path, "PQ_FORMAT")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          val t0 = System.nanoTime()
-          val built = Ann.buildPq(rd(s, dir, "embeddings"), m = 2, ks = 16,
-            seed = 42L, maxIter = 2, initMode = "random")
-          Ann.writePq(built, path)
-          fs.create(marker, true).close()
-          System.err.println(
-            f"[graft] q65 PQ build+persist ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        Ann.readPq(s, path)
-      })
+    Fixture.dir(s, dir, "embeddings", "pq") { path =>
+      Ann.writePq(Ann.buildPq(rd(s, dir, "embeddings"), m = 2, ks = 16,
+        seed = 42L, maxIter = 2, initMode = "random"), path)
     }
+
+  private[graft] def pqIndexFor(s: SparkSession, dir: String): Ann.PqIndex = {
+    val path = pqPathFor(s, dir)
+    Fixture.memo(path)(Ann.readPq(s, path))
+  }
 
   /** Codebooks trained by the last [[qPqTopK]] run, exported into the
     * q65 oracle SQL as literals (Verify dumps oracle_sql.json after all
@@ -1762,22 +1642,16 @@ object SparkEntry {
     * bench median reflects the serving path, which is what an index
     * measures at 100 TB (an indexing job trains; queries probe).
     */
-  private val ivfPqCache =
-    collection.mutable.Map.empty[String, Ann.IvfPqIndex]
-
   private def ivfPqIndexFor(s: SparkSession, dir: String): Ann.IvfPqIndex =
-    ivfPqCache.synchronized {
-      val key = dirCacheKey(s, dir, "embeddings")
-      ivfPqCache.getOrElseUpdate(key, {
-        val ivf = ivfIndexFor(s, dir)
-        val t0 = System.nanoTime()
-        val pq = Ann.buildPq(ivf.assigned, m = 2, ks = 16, seed = 42L,
-          maxIter = 2, initMode = "random")
-        val enc = pq.encoded.localCheckpoint()
-        System.err.println(
-          f"[graft] q174 PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        Ann.IvfPqIndex(enc, ivf.centers, pq.codebooks)
-      })
+    Fixture.memo("ivfpq|" + Fixture.key(s, dir, "embeddings")) {
+      val ivf = ivfIndexFor(s, dir)
+      val t0 = System.nanoTime()
+      val pq = Ann.buildPq(ivf.assigned, m = 2, ks = 16, seed = 42L,
+        maxIter = 2, initMode = "random")
+      val enc = pq.encoded.localCheckpoint()
+      System.err.println(
+        f"[graft] q174 PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      Ann.IvfPqIndex(enc, ivf.centers, pq.codebooks)
     }
 
   @volatile private var ivfPqForOracle
@@ -1806,22 +1680,16 @@ object SparkEntry {
     * trained once per data dir, encoded table localCheckpointed, every
     * later run pays probe + per-probe ADC + rerank only.
     */
-  private val ivfPqResCache =
-    collection.mutable.Map.empty[String, Ann.IvfPqIndex]
-
   private def ivfPqResIndexFor(s: SparkSession, dir: String): Ann.IvfPqIndex =
-    ivfPqResCache.synchronized {
-      val key = dirCacheKey(s, dir, "embeddings")
-      ivfPqResCache.getOrElseUpdate(key, {
-        val t0 = System.nanoTime()
-        val idx = Ann.buildIvfPq(rd(s, dir, "embeddings"), nCentroids = 16,
-          m = 2, ks = 16, seed = 42L, maxIter = 2, initMode = "random",
-          residual = true)
-        val enc = idx.encoded.localCheckpoint()
-        System.err.println(
-          f"[graft] q211 residual IVF-PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        idx.copy(encoded = enc)
-      })
+    Fixture.memo("ivfpqres|" + Fixture.key(s, dir, "embeddings")) {
+      val t0 = System.nanoTime()
+      val idx = Ann.buildIvfPq(rd(s, dir, "embeddings"), nCentroids = 16,
+        m = 2, ks = 16, seed = 42L, maxIter = 2, initMode = "random",
+        residual = true)
+      val enc = idx.encoded.localCheckpoint()
+      System.err.println(
+        f"[graft] q211 residual IVF-PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      idx.copy(encoded = enc)
     }
 
   @volatile private var ivfPqResForOracle
@@ -1907,29 +1775,13 @@ object SparkEntry {
   /** Build-once seam for q222: a dedicated IVF index (q28's training
     * recipe) augmented with SQ8 codes, persisted per data dir.
     */
-  private def ivfSq8IndexFor(s: SparkSession, dir: String): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft-ivfsq8-" +
-      dirCacheKey(s, dir, "embeddings")
-    ivfSq8Built.synchronized {
-      if (!ivfSq8Built.contains(path)) {
-        val marker = new org.apache.hadoop.fs.Path(path, "sq8_model")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          val t0 = System.nanoTime()
-          Ann.writeIvf(Ann.buildIvf(rd(s, dir, "embeddings"),
-            nCentroids = 16, seed = 42L, maxIter = 4, initMode = "random"),
-            path)
-          Ann.sq8AugmentIvf(s, path, sq8ModelFor(s, dir))
-          System.err.println(
-            f"[graft] q222 IVF-SQ8 build+augment ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        ivfSq8Built += path
-      }
+  private def ivfSq8IndexFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "embeddings", "ivfsq8") { path =>
+      Ann.writeIvf(Ann.buildIvf(rd(s, dir, "embeddings"),
+        nCentroids = 16, seed = 42L, maxIter = 4, initMode = "random"),
+        path)
+      Ann.sq8AugmentIvf(s, path, sq8ModelFor(s, dir))
     }
-    path
-  }
-
-  private val ivfSq8Built = collection.mutable.Set.empty[String]
 
   @volatile private var ivfSq8ForOracle
     : (Array[Array[Double]], Ann.Sq8Model) = _
@@ -1984,7 +1836,7 @@ object SparkEntry {
     * — exactly what the manifest commit point guarantees.
     */
   private def qVersionedReads(s: SparkSession, dir: String): DataFrame = {
-    val root = versionedPathFor(s, dir)
+    val root = versionedFor(s, dir)
     def stats(v: Long) =
       graft.sources.Versioned.readAsOf(s, root, v)
         .agg(count(lit(1)).as("n_rows"),
@@ -1994,25 +1846,14 @@ object SparkEntry {
   }
 
   /** Build-once seam for q226: a two-version table per data dir. */
-  private def versionedPathFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-versioned-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          val docs = rd(s, dir, "documents")
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 === 0))
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 =!= 0))
-        }
-        versionedBuilt += root
-      }
+  private def versionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "versioned") { root =>
+      val docs = rd(s, dir, "documents")
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 === 0))
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 =!= 0))
     }
-    root
-  }
-
-  private val versionedBuilt = collection.mutable.Set.empty[String]
 
   /** q228: copy-on-write MERGE at file granularity
     * ([[graft.sources.Versioned.mergeByKey]]) — a two-file versioned
@@ -2037,40 +1878,30 @@ object SparkEntry {
 
   /** Build-once seam for q228: v1 = low doc_id half, v2 = high half
     * (both stat-committed, one file each), v3 = merge bumping
-    * n_chars by 1e6 for doc_id < 10.
+    * n_chars by 1e6 for doc_id < 10. The merge's file counts come from
+    * the v2→v3 manifest diff, never from the standard construction
+    * (ADVICE r17).
     */
   private def mergedVersionedFor(s: SparkSession,
                                  dir: String): (String, Int, Int) = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vmerge-" +
-      dirCacheKey(s, dir, "documents")
-    mergedVersionedBuilt.synchronized {
-      mergedVersionedBuilt.getOrElseUpdate(root, {
-        val docs = rd(s, dir, "documents")
-        val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-        if (graft.sources.Versioned.latestVersion(s, root) < 3) {
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") > half).repartition(1), "doc_id")
-          val updates = docs.filter(col("doc_id") < 10)
-            .withColumn("n_chars", col("n_chars") + 1000000L)
-          val (_, rw, kp) = graft.sources.Versioned.mergeByKey(
-            s, root, updates.repartition(1), "doc_id")
-          (root, rw, kp)
-        } else {
-          // table built by a prior process: derive the merge's counts
-          // from the v2→v3 manifest diff instead of hardcoding the
-          // standard construction (ADVICE r17)
-          val v2 = graft.sources.Versioned.fileList(s, root, 2L).toSet
-          val v3 = graft.sources.Versioned.fileList(s, root, 3L).toSet
-          (root, (v2 -- v3).size, (v2 & v3).size)
-        }
-      })
+    val root = Fixture.dir(s, dir, "documents", "vmerge") { root =>
+      val docs = rd(s, dir, "documents")
+      val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") > half).repartition(1), "doc_id")
+      val updates = docs.filter(col("doc_id") < 10)
+        .withColumn("n_chars", col("n_chars") + 1000000L)
+      graft.sources.Versioned.mergeByKey(
+        s, root, updates.repartition(1), "doc_id")
+    }
+    Fixture.memo(root) {
+      val v2 = graft.sources.Versioned.fileList(s, root, 2L).toSet
+      val v3 = graft.sources.Versioned.fileList(s, root, 3L).toSet
+      (root, (v2 -- v3).size, (v2 & v3).size)
     }
   }
-
-  private val mergedVersionedBuilt =
-    collection.mutable.Map.empty[String, (String, Int, Int)]
 
   /** q229: change-data-feed read ([[graft.sources.Versioned
     * .readChanges]]) across q228's COW merge — the manifest diff opens
@@ -2112,27 +1943,20 @@ object SparkEntry {
     * tight manifest range.
     */
   private def statsVersionedFor(s: SparkSession, dir: String): (String, Long) = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vstats-" +
-      dirCacheKey(s, dir, "documents")
-    statsVersionedBuilt.synchronized {
-      statsVersionedBuilt.getOrElseUpdate(root, {
-        val docs = rd(s, dir, "documents")
-        val r = docs.agg(sum(col("n_chars")).as("s"),
-          count(lit(1)).as("n")).head()
-        val t = r.getLong(0) / r.getLong(1)
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("n_chars") <= t).repartition(1), "n_chars")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("n_chars") > t).repartition(1), "n_chars")
-        }
-        t
-      })
+    val docs = rd(s, dir, "documents")
+    val t = Fixture.memo("vstats|" + Fixture.key(s, dir, "documents")) {
+      val r = docs.agg(sum(col("n_chars")).as("s"),
+        count(lit(1)).as("n")).head()
+      r.getLong(0) / r.getLong(1)
     }
-    (root, statsVersionedBuilt.synchronized(statsVersionedBuilt(root)))
+    val root = Fixture.dir(s, dir, "documents", "vstats") { root =>
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("n_chars") <= t).repartition(1), "n_chars")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("n_chars") > t).repartition(1), "n_chars")
+    }
+    (root, t)
   }
-
-  private val statsVersionedBuilt = collection.mutable.Map.empty[String, Long]
 
   /** q230: OPTIMIZE on the versioned table ([[graft.sources.Versioned
     * .compact]]) — a streaming-shaped table of six tiny stat-committed
@@ -2165,35 +1989,26 @@ object SparkEntry {
   /** Build-once seam for q230: six single-file stat commits
     * (doc_id % 6 slices — the per-epoch tiny files a streaming sink
     * accretes) then one compact(numFiles = 2, range-arranged on
-    * doc_id). Rebuilt-table fallback derives the file counts from the
-    * v6→v7 manifest diff, never hardcodes them.
+    * doc_id). The file counts come from the v6→v7 manifest diff, never
+    * hardcoded.
     */
   private def compactedVersionedFor(s: SparkSession,
                                     dir: String): (String, Int, Int) = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vcompact-" +
-      dirCacheKey(s, dir, "documents")
-    compactedVersionedBuilt.synchronized {
-      compactedVersionedBuilt.getOrElseUpdate(root, {
-        if (graft.sources.Versioned.latestVersion(s, root) < 7) {
-          val docs = rd(s, dir, "documents")
-          (0 until 6).foreach { i =>
-            graft.sources.Versioned.appendWithStats(s, root,
-              docs.filter(col("doc_id") % 6 === i).repartition(1), "doc_id")
-          }
-          val (_, b, a) = graft.sources.Versioned.compact(s, root,
-            numFiles = 2, statCol = Some("doc_id"))
-          (root, b, a)
-        } else {
-          val v6 = graft.sources.Versioned.fileList(s, root, 6L).toSet
-          val v7 = graft.sources.Versioned.fileList(s, root, 7L).toSet
-          (root, (v6 -- v7).size, (v7 -- v6).size)
-        }
-      })
+    val root = Fixture.dir(s, dir, "documents", "vcompact") { root =>
+      val docs = rd(s, dir, "documents")
+      (0 until 6).foreach { i =>
+        graft.sources.Versioned.appendWithStats(s, root,
+          docs.filter(col("doc_id") % 6 === i).repartition(1), "doc_id")
+      }
+      graft.sources.Versioned.compact(s, root,
+        numFiles = 2, statCol = Some("doc_id"))
+    }
+    Fixture.memo(root) {
+      val v6 = graft.sources.Versioned.fileList(s, root, 6L).toSet
+      val v7 = graft.sources.Versioned.fileList(s, root, 7L).toSet
+      (root, (v6 -- v7).size, (v7 -- v6).size)
     }
   }
-
-  private val compactedVersionedBuilt =
-    collection.mutable.Map.empty[String, (String, Int, Int)]
 
   /** The doc_ids q231 deletes: a fixed, scale-independent panel, all
     * inside the low-half file so exactly one file is rewritten.
@@ -2223,39 +2038,30 @@ object SparkEntry {
 
   /** Build-once seam for q231: the q228 construction (low/high halves,
     * one stat-committed file each) then deleteWhere on
-    * [[DeletedDocIds]]. Rebuilt-table fallback derives every count
-    * from the manifests / snapshots, never hardcodes.
+    * [[DeletedDocIds]]. Every count is derived from the manifests /
+    * snapshots, never hardcoded.
     */
   private def deletedVersionedFor(s: SparkSession,
                                   dir: String): (String, Long, Int, Int) = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vdelete-" +
-      dirCacheKey(s, dir, "documents")
-    deletedVersionedBuilt.synchronized {
-      deletedVersionedBuilt.getOrElseUpdate(root, {
-        import s.implicits._
-        val docs = rd(s, dir, "documents")
-        if (graft.sources.Versioned.latestVersion(s, root) < 3) {
-          val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") > half).repartition(1), "doc_id")
-          val (_, hit, rw, kp) = graft.sources.Versioned.deleteWhere(
-            s, root, DeletedDocIds.toDF("doc_id"), "doc_id")
-          (root, hit, rw, kp)
-        } else {
-          val v2 = graft.sources.Versioned.fileList(s, root, 2L).toSet
-          val v3 = graft.sources.Versioned.fileList(s, root, 3L).toSet
-          val hit = graft.sources.Versioned.readAsOf(s, root, 2L).count() -
-            graft.sources.Versioned.readAsOf(s, root, 3L).count()
-          (root, hit, (v2 -- v3).size, (v2 & v3).size)
-        }
-      })
+    val root = Fixture.dir(s, dir, "documents", "vdelete") { root =>
+      import s.implicits._
+      val docs = rd(s, dir, "documents")
+      val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") > half).repartition(1), "doc_id")
+      graft.sources.Versioned.deleteWhere(
+        s, root, DeletedDocIds.toDF("doc_id"), "doc_id")
+    }
+    Fixture.memo(root) {
+      val v2 = graft.sources.Versioned.fileList(s, root, 2L).toSet
+      val v3 = graft.sources.Versioned.fileList(s, root, 3L).toSet
+      val hit = graft.sources.Versioned.readAsOf(s, root, 2L).count() -
+        graft.sources.Versioned.readAsOf(s, root, 3L).count()
+      (root, hit, (v2 -- v3).size, (v2 & v3).size)
     }
   }
-
-  private val deletedVersionedBuilt =
-    collection.mutable.Map.empty[String, (String, Long, Int, Int)]
 
   /** q234: ADDITIVE schema evolution on the versioned table — v1
     * commits (doc_id, n_chars) for the even ids, v2 appends the odd
@@ -2284,25 +2090,16 @@ object SparkEntry {
   /** Build-once seam for q234: two plain appends, the second adding
     * the `source` column (additive evolution recorded in the manifest).
     */
-  private def evolvedVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vevolve-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          val docs = rd(s, dir, "documents")
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 === 0)
-              .select(col("doc_id"), col("n_chars")))
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 =!= 0)
-              .select(col("doc_id"), col("n_chars"), col("source")))
-        }
-        versionedBuilt += root
-      }
+  private def evolvedVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vevolve") { root =>
+      val docs = rd(s, dir, "documents")
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 === 0)
+          .select(col("doc_id"), col("n_chars")))
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 =!= 0)
+          .select(col("doc_id"), col("n_chars"), col("source")))
     }
-    root
-  }
 
   /** q235: categorical value-set file skipping ([[graft.sources
     * .Versioned.appendWithValueStats]] + [[Versioned.readWhereEq]]) —
@@ -2328,24 +2125,15 @@ object SparkEntry {
     * both engines; src0 lands alone in bucket 0's file among
     * src0/4/8/12/16).
     */
-  private def valueVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vvalue-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 4) {
-          val docs = rd(s, dir, "documents")
-          val bucket = expr("CAST(SUBSTRING(source, 4) AS INT) % 4")
-          (0 until 4).foreach { b =>
-            graft.sources.Versioned.appendWithValueStats(s, root,
-              docs.filter(bucket === b).repartition(1), "source")
-          }
-        }
-        versionedBuilt += root
+  private def valueVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vvalue") { root =>
+      val docs = rd(s, dir, "documents")
+      val bucket = expr("CAST(SUBSTRING(source, 4) AS INT) % 4")
+      (0 until 4).foreach { b =>
+        graft.sources.Versioned.appendWithValueStats(s, root,
+          docs.filter(bucket === b).repartition(1), "source")
       }
     }
-    root
-  }
 
   /** q232: TYPED change-data-feed ([[graft.sources.Versioned
     * .readChangesTyped]]) across q228's COW merge — the consumer-facing
@@ -2363,37 +2151,20 @@ object SparkEntry {
       .orderBy(col("_change_type"))
   }
 
-  /** On-disk home of the q233 generation-cycle index clone. */
-  private def ivfGenPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-ivfgen-" +
-      dirCacheKey(s, dir, "embeddings")
-
   /** Build-once clone of the q28 index taken through one full
     * mutation cycle under the v3 manifest protocol: append (v2),
-    * delete (v3), compact (v4). A partial prior build (crash between
-    * commits) is wiped and rebuilt — the version numbers ARE the
-    * query's contract.
+    * delete (v3), compact (v4) — the version numbers ARE the query's
+    * contract.
     */
   private def ivfGenIndexFor(s: SparkSession, dir: String): String =
-    ivfIndexCache.synchronized {
-      val path = ivfGenPathFor(s, dir)
-      if (Ann.latestIvfVersion(s, path) != 4L) {
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        ivfIndexFor(s, dir) // ensure the source index exists
-        val t0 = System.nanoTime()
-        Ann.writeIvf(Ann.readIvf(s, ivfPathFor(s, dir)), path) // v1
-        val batch = rd(s, dir, "embeddings").filter(col("vec_id") < 3)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            reverse(col("embedding")).as("embedding"), col("label"))
-        Ann.appendToIvf(s, path, batch)                        // v2
-        Ann.deleteFromIvf(s, path, Seq(3L))                    // v3
-        Ann.compactIvf(s, path)                                // v4
-        System.err.println(
-          f"[graft] q233 generation-cycle clone ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      path
+    Fixture.dir(s, dir, "embeddings", "ivfgen") { path =>
+      Ann.writeIvf(Ann.readIvf(s, ivfIndexDir(s, dir)), path) // v1
+      val batch = rd(s, dir, "embeddings").filter(col("vec_id") < 3)
+        .select((col("vec_id") + 1000000L).as("vec_id"),
+          reverse(col("embedding")).as("embedding"), col("label"))
+      Ann.appendToIvf(s, path, batch)                        // v2
+      Ann.deleteFromIvf(s, path, Seq(3L))                    // v3
+      Ann.compactIvf(s, path)                                // v4
     }
 
   /** q233: the IVF manifest protocol's generation audit — one clone of
@@ -2445,32 +2216,23 @@ object SparkEntry {
   /** Build-once seam for q236: v1 narrow (int/float), v2 wide
     * (long ids offset by 5e9, double scores).
     */
-  private def widenedVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vwiden-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          val docs = rd(s, dir, "documents")
-          // ids folded mod 1e6 so the int column is valid by
-          // construction at ANY replica scale (the stress batteries
-          // shift doc_id by r*1e9 — a raw cast would ANSI-overflow)
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 === 0)
-              .select((col("doc_id") % 1000000L).cast("int").as("doc_id"),
-                col("n_chars").cast("int").as("n_chars"),
-                (col("n_chars") % 97).cast("float").as("score")))
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 =!= 0)
-              .select((col("doc_id") % 1000000L + 5000000000L).as("doc_id"),
-                col("n_chars").cast("long").as("n_chars"),
-                (col("n_chars") % 97).cast("double").as("score")))
-        }
-        versionedBuilt += root
-      }
+  private def widenedVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vwiden") { root =>
+      val docs = rd(s, dir, "documents")
+      // ids folded mod 1e6 so the int column is valid by
+      // construction at ANY replica scale (the stress batteries
+      // shift doc_id by r*1e9 — a raw cast would ANSI-overflow)
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 === 0)
+          .select((col("doc_id") % 1000000L).cast("int").as("doc_id"),
+            col("n_chars").cast("int").as("n_chars"),
+            (col("n_chars") % 97).cast("float").as("score")))
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 =!= 0)
+          .select((col("doc_id") % 1000000L + 5000000000L).as("doc_id"),
+            col("n_chars").cast("long").as("n_chars"),
+            (col("n_chars") % 97).cast("double").as("score")))
     }
-    root
-  }
 
   /** q237: Z-ORDER OPTIMIZE ([[graft.sources.Versioned.compact]] with
     * `zorderBy`, VERDICT r18 item 5) — four doc_id-sliced commits
@@ -2498,97 +2260,61 @@ object SparkEntry {
     */
   private def zorderVersionedFor(s: SparkSession,
                                  dir: String): (String, Long, Long) = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vzorder-" +
-      dirCacheKey(s, dir, "documents")
-    zorderVersionedBuilt.synchronized {
-      zorderVersionedBuilt.getOrElseUpdate(root, {
-        val docs = rd(s, dir, "documents")
-        val r = docs.agg(min(col("n_chars")), max(col("n_chars"))).head()
-        val (mn, mx) = (r.getLong(0), r.getLong(1))
-        if (graft.sources.Versioned.latestVersion(s, root) < 5) {
-          (0 until 4).foreach { i =>
-            graft.sources.Versioned.appendWithStats(s, root,
-              docs.filter(col("doc_id") % 4 === i)
-                .select(col("doc_id"), col("n_chars")).repartition(1),
-              "doc_id")
-          }
-          graft.sources.Versioned.compact(s, root, numFiles = 8,
-            zorderBy = Seq("doc_id", "n_chars"))
-        }
-        (root, mn, mn + (mx - mn) / 4)
-      })
+    val docs = rd(s, dir, "documents")
+    val (mn, mx) = Fixture.memo("vzorder|" + Fixture.key(s, dir, "documents")) {
+      val r = docs.agg(min(col("n_chars")), max(col("n_chars"))).head()
+      (r.getLong(0), r.getLong(1))
     }
+    val root = Fixture.dir(s, dir, "documents", "vzorder") { root =>
+      (0 until 4).foreach { i =>
+        graft.sources.Versioned.appendWithStats(s, root,
+          docs.filter(col("doc_id") % 4 === i)
+            .select(col("doc_id"), col("n_chars")).repartition(1),
+          "doc_id")
+      }
+      graft.sources.Versioned.compact(s, root, numFiles = 8,
+        zorderBy = Seq("doc_id", "n_chars"))
+    }
+    (root, mn, mn + (mx - mn) / 4)
   }
 
-  private val zorderVersionedBuilt =
-    collection.mutable.Map.empty[String, (String, Long, Long)]
-
-  /** On-disk homes of the q238 living-corpus table + synced index. */
-  private def syncTablePathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-synctbl-" +
-      dirCacheKey(s, dir, "embeddings")
-
-  private def syncIndexPathFor(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-syncidx-" +
-      dirCacheKey(s, dir, "embeddings")
-
   /** Build-once seam for q238: the embeddings corpus as a versioned
-    * table (range-arranged stat commits so the COW merge prunes), the
-    * q28 index cloned as its serving index anchored at corpus v1, then
-    * the corpus LIVES — one COW merge (ids < 5 re-embedded + ids < 3
-    * cloned to +1e6 inserts, v2) and one delete (ids 7, 11, v3) — and
-    * ONE [[graft.search.IndexSync.syncToLatest]] maps v3 onto index
-    * mutations. A partial prior build is wiped: the version numbers
-    * ARE the query's contract.
+    * table (range-arranged stat commits so the COW merge prunes) that
+    * LIVES — one COW merge (ids < 5 re-embedded + ids < 3 cloned to
+    * +1e6 inserts, v2) and one delete (ids 7, 11, v3) — and the q28
+    * index cloned as its serving index anchored at corpus v1, then ONE
+    * [[graft.search.IndexSync.syncToLatest]] maps v3 onto index
+    * mutations. The report's counts are replayed from the corpus
+    * construction, not hardcoded literals.
     */
   private def syncedIndexFor(s: SparkSession,
-                             dir: String): (String, String, graft.search.IndexSync.SyncReport) =
-    ivfIndexCache.synchronized {
-      val table = syncTablePathFor(s, dir)
-      val idx = syncIndexPathFor(s, dir)
-      syncCycleBuilt.getOrElseUpdate(table, {
-        val ok = graft.sources.Versioned.latestVersion(s, table) == 3L &&
-          Ann.latestIvfVersion(s, idx) == 3L &&
-          graft.search.IndexSync.syncedCorpusVersion(s, idx).contains(3L)
-        if (!ok) {
-          val fs = new org.apache.hadoop.fs.Path(table)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(table), true)
-          fs.delete(new org.apache.hadoop.fs.Path(idx), true)
-          ivfIndexFor(s, dir) // ensure the source index exists
-          val t0 = System.nanoTime()
-          val emb = rd(s, dir, "embeddings")
-          graft.sources.Versioned.appendWithStats(s, table,
-            emb.repartitionByRange(8, col("vec_id")), "vec_id")
-          Ann.writeIvf(Ann.readIvf(s, ivfPathFor(s, dir)), idx) // v1
-          graft.search.IndexSync.markSynced(s, idx, 1L)
-          val updates = emb.filter(col("vec_id") < 5)
-            .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
-              col("label"))
-            .unionByName(emb.filter(col("vec_id") < 3)
-              .select((col("vec_id") + 1000000L).as("vec_id"),
-                reverse(col("embedding")).as("embedding"), col("label")))
-          graft.sources.Versioned.mergeByKey(s, table,
-            updates.repartition(1), "vec_id")                  // v2
-          import s.implicits._
-          graft.sources.Versioned.deleteWhere(s, table,
-            Seq(7L, 11L).toDF("vec_id"), "vec_id")             // v3
-          System.err.println(
-            f"[graft] q238 sync-cycle build ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        val report = graft.search.IndexSync.syncToLatest(s, table, idx)
-          .getOrElse(graft.search.IndexSync.SyncReport(1L, 3L,
-            // already synced by a prior process: replay the counts
-            // from the corpus construction, not hardcoded literals
-            rd(s, dir, "embeddings").filter(col("vec_id") < 5).count() +
-              rd(s, dir, "embeddings").filter(col("vec_id") < 3).count(),
-            2L, Ann.latestIvfVersion(s, idx)))
-        (table, idx, report)
-      })
+                             dir: String): (String, String, graft.search.IndexSync.SyncReport) = {
+    val emb = rd(s, dir, "embeddings")
+    val table = Fixture.dir(s, dir, "embeddings", "synctbl") { table =>
+      graft.sources.Versioned.appendWithStats(s, table,
+        emb.repartitionByRange(8, col("vec_id")), "vec_id")
+      val updates = emb.filter(col("vec_id") < 5)
+        .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
+          col("label"))
+        .unionByName(emb.filter(col("vec_id") < 3)
+          .select((col("vec_id") + 1000000L).as("vec_id"),
+            reverse(col("embedding")).as("embedding"), col("label")))
+      graft.sources.Versioned.mergeByKey(s, table,
+        updates.repartition(1), "vec_id")                  // v2
+      import s.implicits._
+      graft.sources.Versioned.deleteWhere(s, table,
+        Seq(7L, 11L).toDF("vec_id"), "vec_id")             // v3
     }
-
-  private val syncCycleBuilt = collection.mutable.Map.empty[
-    String, (String, String, graft.search.IndexSync.SyncReport)]
+    val idx = Fixture.dir(s, dir, "embeddings", "syncidx") { idx =>
+      Ann.writeIvf(Ann.readIvf(s, ivfIndexDir(s, dir)), idx) // v1
+      graft.search.IndexSync.markSynced(s, idx, 1L)
+      graft.search.IndexSync.syncToLatest(s, table, idx)
+    }
+    Fixture.memo(idx)((table, idx, graft.search.IndexSync.SyncReport(1L, 3L,
+      emb.filter(col("vec_id") < 5).count() +
+        emb.filter(col("vec_id") < 3).count(),
+      2L, Ann.latestIvfVersion(s, idx))))
+  }
 
   /** q238: CDC-DRIVEN INCREMENTAL INDEX MAINTENANCE
     * ([[graft.search.IndexSync]], VERDICT r18 item 6) — the living
@@ -2644,22 +2370,13 @@ object SparkEntry {
   }
 
   /** Build-once seam for q239: one three-column commit, one drop. */
-  private def droppedVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vdrop-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          graft.sources.Versioned.append(s, root,
-            rd(s, dir, "documents")
-              .select(col("doc_id"), col("n_chars"), col("source")))
-          graft.sources.Versioned.dropColumn(s, root, "source")
-        }
-        versionedBuilt += root
-      }
+  private def droppedVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vdrop") { root =>
+      graft.sources.Versioned.append(s, root,
+        rd(s, dir, "documents")
+          .select(col("doc_id"), col("n_chars"), col("source")))
+      graft.sources.Versioned.dropColumn(s, root, "source")
     }
-    root
-  }
 
   /** q240: RESTORE / rollback on the versioned table
     * ([[graft.sources.Versioned.restore]]) — v1 commits the full
@@ -2686,25 +2403,16 @@ object SparkEntry {
   /** Build-once seam for q240: one single-file stats commit, one COW
     * delete of the fixed panel, one restore — final version 3.
     */
-  private def restoredVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vrestore-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 3) {
-          val docs = rd(s, dir, "documents")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.repartition(1), "doc_id")
-          import s.implicits._
-          graft.sources.Versioned.deleteWhere(s, root,
-            DeletedDocIds.toDF("doc_id"), "doc_id")
-          graft.sources.Versioned.restore(s, root, 1L)
-        }
-        versionedBuilt += root
-      }
+  private def restoredVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vrestore") { root =>
+      val docs = rd(s, dir, "documents")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.repartition(1), "doc_id")
+      import s.implicits._
+      graft.sources.Versioned.deleteWhere(s, root,
+        DeletedDocIds.toDF("doc_id"), "doc_id")
+      graft.sources.Versioned.restore(s, root, 1L)
     }
-    root
-  }
 
   /** q241: METADATA-ONLY count(*)
     * ([[graft.sources.Versioned.appendCounted]] + [[graft.sources
@@ -2726,25 +2434,16 @@ object SparkEntry {
   /** Build-once seam for q241: v1 = even doc_ids, v2 = odd — both
     * counted commits carrying doc_id zone stats.
     */
-  private def countedVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vcount-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          val docs = rd(s, dir, "documents")
-          graft.sources.Versioned.appendCounted(s, root,
-            docs.filter(col("doc_id") % 2 === 0).repartition(2),
-            Seq("doc_id"))
-          graft.sources.Versioned.appendCounted(s, root,
-            docs.filter(col("doc_id") % 2 =!= 0).repartition(2),
-            Seq("doc_id"))
-        }
-        versionedBuilt += root
-      }
+  private def countedVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vcount") { root =>
+      val docs = rd(s, dir, "documents")
+      graft.sources.Versioned.appendCounted(s, root,
+        docs.filter(col("doc_id") % 2 === 0).repartition(2),
+        Seq("doc_id"))
+      graft.sources.Versioned.appendCounted(s, root,
+        docs.filter(col("doc_id") % 2 =!= 0).repartition(2),
+        Seq("doc_id"))
     }
-    root
-  }
 
   /** q242: BLOOM-pruned point lookup
     * ([[graft.sources.Versioned.appendWithBloom]] + [[graft.sources
@@ -2774,25 +2473,16 @@ object SparkEntry {
   /** Build-once seam for q242: even then odd doc_ids, two files each,
     * blooms on doc_id.
     */
-  private def bloomVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vbloom-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          val docs = rd(s, dir, "documents")
-            .select(col("doc_id"), col("lang"), col("source"),
-              col("n_chars"))
-          graft.sources.Versioned.appendWithBloom(s, root,
-            docs.filter(col("doc_id") % 2 === 0).repartition(2), "doc_id")
-          graft.sources.Versioned.appendWithBloom(s, root,
-            docs.filter(col("doc_id") % 2 =!= 0).repartition(2), "doc_id")
-        }
-        versionedBuilt += root
-      }
+  private def bloomVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vbloom") { root =>
+      val docs = rd(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      graft.sources.Versioned.appendWithBloom(s, root,
+        docs.filter(col("doc_id") % 2 === 0).repartition(2), "doc_id")
+      graft.sources.Versioned.appendWithBloom(s, root,
+        docs.filter(col("doc_id") % 2 =!= 0).repartition(2), "doc_id")
     }
-    root
-  }
 
   /** q243: copy-on-write UPDATE
     * ([[graft.sources.Versioned.updateWhere]]) — `UPDATE … SET
@@ -2819,29 +2509,20 @@ object SparkEntry {
   /** Build-once seam for q243: low/high halves (one stats file each),
     * then one COW update of the fixed low-id panel — final version 3.
     */
-  private def updatedVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vupdate-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 3) {
-          val docs = rd(s, dir, "documents")
-          val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") > half).repartition(1), "doc_id")
-          import s.implicits._
-          graft.sources.Versioned.updateWhere(s, root,
-            DeletedDocIds.toDF("doc_id"), "doc_id",
-            Map("n_chars" -> "n_chars * 2 + 7",
-              "source" -> "concat(source, '!')"))
-        }
-        versionedBuilt += root
-      }
+  private def updatedVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vupdate") { root =>
+      val docs = rd(s, dir, "documents")
+      val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") > half).repartition(1), "doc_id")
+      import s.implicits._
+      graft.sources.Versioned.updateWhere(s, root,
+        DeletedDocIds.toDF("doc_id"), "doc_id",
+        Map("n_chars" -> "n_chars * 2 + 7",
+          "source" -> "concat(source, '!')"))
     }
-    root
-  }
 
   /** q244: ZERO-COPY SHALLOW CLONE
     * ([[graft.sources.Versioned.cloneShallow]]) — the clone's v1
@@ -2875,28 +2556,20 @@ object SparkEntry {
     */
   private def clonedVersionedFor(s: SparkSession,
                                  dir: String): (String, String) = {
-    val key = dirCacheKey(s, dir, "documents")
-    val srcRoot = s"${sys.props("java.io.tmpdir")}/graft-vclsrc-$key"
-    val dstRoot = s"${sys.props("java.io.tmpdir")}/graft-vclone-$key"
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(dstRoot)) {
-        val docs = rd(s, dir, "documents")
-        if (graft.sources.Versioned.latestVersion(s, srcRoot) < 2) {
-          val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-          graft.sources.Versioned.appendWithStats(s, srcRoot,
-            docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
-          graft.sources.Versioned.appendWithStats(s, srcRoot,
-            docs.filter(col("doc_id") > half).repartition(1), "doc_id")
-        }
-        if (graft.sources.Versioned.latestVersion(s, dstRoot) < 2) {
-          graft.sources.Versioned.cloneShallow(s, srcRoot, dstRoot)
-          graft.sources.Versioned.mergeByKey(s, dstRoot,
-            docs.filter(col("doc_id") < 10)
-              .withColumn("n_chars", col("n_chars") + 1000000L)
-              .repartition(1), "doc_id")
-        }
-        versionedBuilt += dstRoot
-      }
+    val docs = rd(s, dir, "documents")
+    val srcRoot = Fixture.dir(s, dir, "documents", "vclsrc") { srcRoot =>
+      val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      graft.sources.Versioned.appendWithStats(s, srcRoot,
+        docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
+      graft.sources.Versioned.appendWithStats(s, srcRoot,
+        docs.filter(col("doc_id") > half).repartition(1), "doc_id")
+    }
+    val dstRoot = Fixture.dir(s, dir, "documents", "vclone") { dstRoot =>
+      graft.sources.Versioned.cloneShallow(s, srcRoot, dstRoot)
+      graft.sources.Versioned.mergeByKey(s, dstRoot,
+        docs.filter(col("doc_id") < 10)
+          .withColumn("n_chars", col("n_chars") + 1000000L)
+          .repartition(1), "doc_id")
     }
     (srcRoot, dstRoot)
   }
@@ -2923,23 +2596,14 @@ object SparkEntry {
   }
 
   /** Build-once seam for q245: v1 = even doc_ids, v2 = odd. */
-  private def tsVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vts-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 2) {
-          val docs = rd(s, dir, "documents")
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 === 0))
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 =!= 0))
-        }
-        versionedBuilt += root
-      }
+  private def tsVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vts") { root =>
+      val docs = rd(s, dir, "documents")
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 === 0))
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 =!= 0))
     }
-    root
-  }
 
   /** q246: durable-cursor CDC tailing
     * ([[graft.sources.Versioned.followChanges]]) — a consumer follows
@@ -2965,33 +2629,24 @@ object SparkEntry {
     * source v2 = COW merge bumping doc_id < 10 by 1e6 chars, sync —
     * the delivery log lands as two versioned commits.
     */
-  private def followedVersionedFor(s: SparkSession, dir: String): String = {
-    val key = dirCacheKey(s, dir, "documents")
-    val srcRoot = s"${sys.props("java.io.tmpdir")}/graft-vfsrc-$key"
-    val logRoot = s"${sys.props("java.io.tmpdir")}/graft-vflog-$key"
-    val cursor = s"${sys.props("java.io.tmpdir")}/graft-vfcur-$key"
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(logRoot)) {
-        if (graft.sources.Versioned.latestVersion(s, logRoot) < 2) {
-          val docs = rd(s, dir, "documents")
-          def deliver(df: DataFrame, a: Long, b: Long): Unit =
-            graft.sources.Versioned.append(s, logRoot,
-              df.select(col("doc_id"), col("n_chars"),
-                col("_change_type").as("change_type")))
-          graft.sources.Versioned.appendWithStats(s, srcRoot,
-            docs.repartition(1), "doc_id")
-          graft.sources.Versioned.followChanges(s, srcRoot, cursor)(deliver _)
-          graft.sources.Versioned.mergeByKey(s, srcRoot,
-            docs.filter(col("doc_id") < 10)
-              .withColumn("n_chars", col("n_chars") + 1000000L)
-              .repartition(1), "doc_id")
-          graft.sources.Versioned.followChanges(s, srcRoot, cursor)(deliver _)
-        }
-        versionedBuilt += logRoot
-      }
+  private def followedVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vflog") { logRoot =>
+      val srcRoot = Fixture.scratch(s, dir, "documents", "vfsrc")
+      val cursor = Fixture.scratch(s, dir, "documents", "vfcur")
+      val docs = rd(s, dir, "documents")
+      def deliver(df: DataFrame, a: Long, b: Long): Unit =
+        graft.sources.Versioned.append(s, logRoot,
+          df.select(col("doc_id"), col("n_chars"),
+            col("_change_type").as("change_type")))
+      graft.sources.Versioned.appendWithStats(s, srcRoot,
+        docs.repartition(1), "doc_id")
+      graft.sources.Versioned.followChanges(s, srcRoot, cursor)(deliver _)
+      graft.sources.Versioned.mergeByKey(s, srcRoot,
+        docs.filter(col("doc_id") < 10)
+          .withColumn("n_chars", col("n_chars") + 1000000L)
+          .repartition(1), "doc_id")
+      graft.sources.Versioned.followChanges(s, srcRoot, cursor)(deliver _)
     }
-    logRoot
-  }
 
   /** q247: VERSION EXPIRY ([[graft.sources.Versioned.expireVersions]])
     * — Iceberg's `expire_snapshots`: after an OPTIMIZE supersedes the
@@ -3018,26 +2673,17 @@ object SparkEntry {
   /** Build-once seam for q247: two single-file stats commits, one
     * compact(1), then expire below the compacted head (keepFrom = 3).
     */
-  private def expiredVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vexpire-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 3) {
-          val docs = rd(s, dir, "documents")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") < 10).repartition(1), "doc_id")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") >= 10).repartition(1), "doc_id")
-          graft.sources.Versioned.compact(s, root, numFiles = 1,
-            statCol = Some("doc_id"))
-          graft.sources.Versioned.expireVersions(s, root, keepFrom = 3L)
-        }
-        versionedBuilt += root
-      }
+  private def expiredVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vexpire") { root =>
+      val docs = rd(s, dir, "documents")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") < 10).repartition(1), "doc_id")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") >= 10).repartition(1), "doc_id")
+      graft.sources.Versioned.compact(s, root, numFiles = 1,
+        statCol = Some("doc_id"))
+      graft.sources.Versioned.expireVersions(s, root, keepFrom = 3L)
     }
-    root
-  }
 
   /** q248: `INSERT OVERWRITE … WHERE` backfill
     * ([[graft.sources.Versioned.overwriteWhere]]) — the low-id band is
@@ -3062,29 +2708,19 @@ object SparkEntry {
   /** Build-once seam for q248: low/high halves (one stats file each),
     * then one band overwrite of [0, 9] with the recomputed batch.
     */
-  private def overwrittenVersionedFor(s: SparkSession,
-                                      dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vover-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 3) {
-          val docs = rd(s, dir, "documents")
-          val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
-          graft.sources.Versioned.appendWithStats(s, root,
-            docs.filter(col("doc_id") > half).repartition(1), "doc_id")
-          graft.sources.Versioned.overwriteWhere(s, root,
-            docs.filter(col("doc_id") < 10)
-              .withColumn("n_chars", col("n_chars") * 3 + 1)
-              .repartition(1), "doc_id", 0L, 9L)
-        }
-        versionedBuilt += root
-      }
+  private def overwrittenVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vover") { root =>
+      val docs = rd(s, dir, "documents")
+      val half = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") <= half).repartition(1), "doc_id")
+      graft.sources.Versioned.appendWithStats(s, root,
+        docs.filter(col("doc_id") > half).repartition(1), "doc_id")
+      graft.sources.Versioned.overwriteWhere(s, root,
+        docs.filter(col("doc_id") < 10)
+          .withColumn("n_chars", col("n_chars") * 3 + 1)
+          .repartition(1), "doc_id", 0L, 9L)
     }
-    root
-  }
 
   /** q249: CHECK constraints on the versioned table
     * ([[graft.sources.Versioned.addConstraint]]) — declared between
@@ -3112,25 +2748,16 @@ object SparkEntry {
   /** Build-once seam for q249: even docs, the constraint, odd docs
     * (the last append validated under it) — final version 3.
     */
-  private def constrainedVersionedFor(s: SparkSession, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft-vcheck-" +
-      dirCacheKey(s, dir, "documents")
-    versionedBuilt.synchronized {
-      if (!versionedBuilt.contains(root)) {
-        if (graft.sources.Versioned.latestVersion(s, root) < 3) {
-          val docs = rd(s, dir, "documents")
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 === 0))
-          graft.sources.Versioned.addConstraint(s, root, "chars_valid",
-            CheckConstraintPred)
-          graft.sources.Versioned.append(s, root,
-            docs.filter(col("doc_id") % 2 =!= 0))
-        }
-        versionedBuilt += root
-      }
+  private def constrainedVersionedFor(s: SparkSession, dir: String): String =
+    Fixture.dir(s, dir, "documents", "vcheck") { root =>
+      val docs = rd(s, dir, "documents")
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 === 0))
+      graft.sources.Versioned.addConstraint(s, root, "chars_valid",
+        CheckConstraintPred)
+      graft.sources.Versioned.append(s, root,
+        docs.filter(col("doc_id") % 2 =!= 0))
     }
-    root
-  }
 
   /** q250: DESCRIBE HISTORY ([[graft.sources.Versioned.history]]) —
     * q243's table (two appends + one COW update) reads back as its
@@ -3231,7 +2858,7 @@ object SparkEntry {
     marginFrontierForOracle = (index.centers, probeRows)
     val probes = probeRows.toDF("query_id", "margin_pm", "centroid_id")
     val probedIds = probeRows.map(_._3).distinct.sorted
-    val lists = Ann.listsFrame(s, ivfPathFor(s, dir))
+    val lists = Ann.listsFrame(s, ivfIndexDir(s, dir))
       .filter(col("centroid_id").isin(probedIds: _*))
     val qArr = qs.map { case (qid, qv) => qid -> qv }.toMap
     val qLit = map(qs.flatMap { case (qid, qv) =>
@@ -3406,7 +3033,7 @@ object SparkEntry {
     val queries = rd(s, dir, "embeddings").filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("query_vec"))
-    Ann.ivfSearchAdaptive(s, ivfPathFor(s, dir), queries, k = 10,
+    Ann.ivfSearchAdaptive(s, ivfIndexDir(s, dir), queries, k = 10,
       margin = 0.2, maxProbe = 8)
   }
 
@@ -3521,13 +3148,9 @@ object SparkEntry {
     Ann.sq8AffineTopK(emb, model, qVec, k = 5, shortlist = 32)
   }
 
-  private val sq8Cache = collection.mutable.Map.empty[String, Ann.Sq8Model]
-
   private def sq8ModelFor(s: SparkSession, dir: String): Ann.Sq8Model =
-    sq8Cache.synchronized {
-      sq8Cache.getOrElseUpdate(dirCacheKey(s, dir, "embeddings"),
-        Ann.sq8Train(rd(s, dir, "embeddings")))
-    }
+    Fixture.memo("sq8|" + Fixture.key(s, dir, "embeddings"))(
+      Ann.sq8Train(rd(s, dir, "embeddings")))
 
   @volatile private var sq8ForOracle: Ann.Sq8Model = _
 
@@ -4333,43 +3956,33 @@ object SparkEntry {
     Ann.marginMine(a, b, k = 4, minMargin = 1.05, bits = bits)
   }
 
-  /** Build-once fixture tree for [[qIngestPipeline]] under java.io.tmpdir
-    * (keyed by data dir, marker-guarded — same lifecycle as the IVF
-    * index cache). 60 driver-side rows; this is test-fixture
-    * materialization, not a query path.
+  /** Build-once [[Fixture]] tree for [[qIngestPipeline]]. 60
+    * driver-side rows; this is test-fixture materialization, not a
+    * query path.
     */
   private def ingestFixtureFor(s: SparkSession, dir: String): String =
-    this.synchronized {
-      val key = dirCacheKey(s, dir, "documents")
-      val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft-ingest-$key")
-      // v2: adds the oversized doc_3 so F3 runs on disk (marker bump
-      // rebuilds trees cached by earlier rounds)
-      val marker = new java.io.File(root, ".GRAFT_FIXTURE_V2") // hidden: F1-invisible
-      if (!marker.exists()) {
-        rd(s, dir, "documents").filter(col("doc_id") < 60)
-          .select(col("doc_id"), col("text")).collect()
-          .foreach { r =>
-            val id = r.getLong(0)
-            val text = r.getString(1)
-            val (sub, name, body) = (id % 13).toInt match {
-              case 0 => (".hidden", s"doc_$id.md", text) // F1 drops
-              case 1 => (s"sub${id % 3}", s"doc_$id.bin", text) // F2 drops
-              case 2 => (s"sub${id % 3}", s"doc_$id.md", "") // F4 drops
-              // doc 3 alone is padded past MaxFileBytes so the F3 size
-              // cap is exercised ON DISK (not just in spec): the scan
-              // must read its metadata and drop it before decode
-              case _ if id == 3L =>
-                (s"sub${id % 3}", s"doc_$id.md",
-                  text + "x" * (graft.ingest.Ingest.MaxFileBytes.toInt + 1))
-              case _ => (s"sub${id % 3}", s"doc_$id.md", text)
-            }
-            val f = new java.io.File(new java.io.File(root, sub), name)
-            f.getParentFile.mkdirs()
-            java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
+    Fixture.dir(s, dir, "documents", "ingest") { root =>
+      rd(s, dir, "documents").filter(col("doc_id") < 60)
+        .select(col("doc_id"), col("text")).collect()
+        .foreach { r =>
+          val id = r.getLong(0)
+          val text = r.getString(1)
+          val (sub, name, body) = (id % 13).toInt match {
+            case 0 => (".hidden", s"doc_$id.md", text) // F1 drops
+            case 1 => (s"sub${id % 3}", s"doc_$id.bin", text) // F2 drops
+            case 2 => (s"sub${id % 3}", s"doc_$id.md", "") // F4 drops
+            // doc 3 alone is padded past MaxFileBytes so the F3 size
+            // cap is exercised ON DISK (not just in spec): the scan
+            // must read its metadata and drop it before decode
+            case _ if id == 3L =>
+              (s"sub${id % 3}", s"doc_$id.md",
+                text + "x" * (graft.ingest.Ingest.MaxFileBytes.toInt + 1))
+            case _ => (s"sub${id % 3}", s"doc_$id.md", text)
           }
-        java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      }
-      root.getAbsolutePath
+          val f = new java.io.File(new java.io.File(root, sub), name)
+          f.getParentFile.mkdirs()
+          java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
+        }
     }
 
   /** Correlated-scalar-subquery shape, decorrelated: orders priced above
@@ -6613,25 +6226,20 @@ object SparkEntry {
       .select("w1", "w2", "c_ab", "lift_ppm")
   }
 
+  @volatile private var whitenForOracle: (Array[Array[Double]], Array[Double]) = _
+
   /** Whitening model (W, mean) per testdata dir, fit once per process
     * (same build-once discipline as the q28 IVF index): the fit is one
     * pass over the corpus; serving queries must not pay it again.
     */
-  private val whitenCache =
-    scala.collection.mutable.HashMap.empty[String, (Array[Array[Double]], Array[Double])]
-  @volatile private var whitenForOracle: (Array[Array[Double]], Array[Double]) = _
-
   private def whitenModelFor(s: SparkSession, dir: String,
                              dims: Int): (Array[Array[Double]], Array[Double]) =
-    whitenCache.synchronized {
-      val key = dirCacheKey(s, dir, "embeddings") + s"|$dims"
-      whitenCache.getOrElseUpdate(key, {
-        val emb = rd(s, dir, "embeddings")
-        val (c, mean) = graft.search.Whiten.covMatrix(
-          graft.search.Whiten.covarianceFixedPoint(emb, dims = dims),
-          graft.search.Whiten.momentsFixedPoint(emb, dims = dims), dims)
-        (graft.search.Whiten.whiteningMatrix(c), mean)
-      })
+    Fixture.memo(s"whiten|${Fixture.key(s, dir, "embeddings")}|$dims") {
+      val emb = rd(s, dir, "embeddings")
+      val (c, mean) = graft.search.Whiten.covMatrix(
+        graft.search.Whiten.covarianceFixedPoint(emb, dims = dims),
+        graft.search.Whiten.momentsFixedPoint(emb, dims = dims), dims)
+      (graft.search.Whiten.whiteningMatrix(c), mean)
     }
 
   /** End-to-end whitened retrieval: ZCA-whiten the 16-dim embedding
@@ -6677,15 +6285,6 @@ object SparkEntry {
   }
 
   // ===========================================================================
-
-  /** Bench-only probes: run by [[Bench]] alongside [[queries]] but NOT
-    * dumped by [[Verify]] — the slot for anything with timing signal but
-    * no DuckDB-expressible oracle. Empty since the r12 xxh twins
-    * collapsed into the `spark.graft.hasher` conf ([[hasherSensitive]]):
-    * Bench now measures the xxh production path by flipping the conf on
-    * the SAME registry entries instead of running twin queries.
-    */
-  def benchOnly: Map[String, (SparkSession, String) => DataFrame] = Map.empty
 
   /** Queries whose hot kernel honors `spark.graft.hasher`: the oracle
     * gate always runs them on the default (md5); [[Bench]] re-runs them

@@ -69,16 +69,46 @@ final class VectorDb(spark: SparkSession, path: String,
   /** S7/F5: validate (embedding + content present) and append. Duplicate
     * content accumulates — append is the reference's contract (§2.9.5),
     * dedup is an explicit downstream operator (graft.dedup).
+    *
+    * A store that already has files keeps ONE parquet schema: incoming
+    * columns are cast by name to the stored types (a JSON batch's
+    * `array<double>` / `bigint` / string timestamp onto a Convert-written
+    * store's `array<float>` / `int` / `timestamp`) and stored columns the
+    * batch lacks are written as typed nulls. A column the store lacks,
+    * or a value that will not cast, is an IllegalArgumentException and
+    * nothing is written.
     */
   def addDocuments(docs: DataFrame): AddResult = {
     require(docs.columns.contains("embedding") && docs.columns.contains("content"),
       "documents need `embedding` and `content` columns " +
         s"(got: ${docs.columns.mkString(", ")})")
-    val n = docs.count()
-    val valid = docs.filter(col("embedding").isNotNull && col("content").isNotNull)
-    val nValid = valid.count()
-    valid.write.mode("append").parquet(path)
-    AddResult(nValid, n - nValid)
+    val stored = if (exists) Some(corpus().schema) else None
+    stored.foreach { st =>
+      val unknown = docs.columns.filterNot(st.fieldNames.contains)
+      require(unknown.isEmpty,
+        s"columns not in the store schema at $path: ${unknown.mkString(", ")} " +
+          s"(store: ${st.simpleString})")
+    }
+    val casts = stored.toSeq.flatMap(_.fields.filter(f =>
+      docs.columns.contains(f.name) && docs.schema(f.name).dataType != f.dataType))
+    val isValid = col("embedding").isNotNull && col("content").isNotNull
+    // one job: the row counts plus, per cast column, the valid rows
+    // whose non-null value would not survive the cast
+    val r = docs.agg(count(lit(1)), count(when(isValid, 1)) +:
+      casts.map(f => count(when(isValid && col(f.name).isNotNull &&
+        col(f.name).try_cast(f.dataType).isNull, 1))): _*).head()
+    val uncastable = casts.zipWithIndex.collect {
+      case (f, i) if r.getLong(i + 2) > 0 =>
+        s"${f.name} (${r.getLong(i + 2)} values not castable to ${f.dataType.simpleString})"
+    }
+    require(uncastable.isEmpty,
+      s"documents do not fit the store schema at $path: ${uncastable.mkString(", ")}")
+    val valid = docs.filter(isValid)
+    stored.fold(valid)(st => valid.select(st.fields.toSeq.map { f =>
+      (if (docs.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*)).write.mode("append").parquet(path)
+    AddResult(r.getLong(1), r.getLong(0) - r.getLong(1))
   }
 
   /** Q1-Q5: embed the query text with the store's embedder and run the

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import VectorDbServer.jstr
+
 /** The reference's HTTP wire surface (`/root/reference/
   * mock_vector_db_api.py:150,230,314,381,431` — Flask endpoints
   * POST /add_documents, POST /query, GET /stats, POST /clear,
@@ -67,18 +69,6 @@ final class VectorDbServer(spark: SparkSession, db: VectorDb, port: Int = 0) {
     import spark.implicits._
     spark.read.json(Seq(s).toDS())
   }
-
-  /** JSON string escape (same table as Verify's oracle dump). */
-  private def jstr(s: String): String =
-    "\"" + Option(s).getOrElse("null").flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def err(msg: String): String = s"""{"error": ${jstr(msg)}}"""
 
@@ -179,6 +169,22 @@ object VectorDbServer {
     * reference posts 100-doc JSON batches, ~1 MB), far below heap harm.
     */
   val MaxBodyBytes: Long = 16L * 1024 * 1024
+
+  /** JSON string literal for `s`: escapes backslash, quote and ALL
+    * control chars (< 0x20) — a tab or CR in builder-authored oracle
+    * SQL would otherwise make a consumer's json.load fail. Shared by
+    * the server's responses and [[graft.Verify]]'s oracle dump.
+    */
+  def jstr(s: String): String =
+    "\"" + Option(s).getOrElse("null").flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 
   final class BodyTooLarge(got: Long) extends RuntimeException(
     s"request body too large ($got bytes > cap $MaxBodyBytes)")

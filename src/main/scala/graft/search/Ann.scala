@@ -1182,7 +1182,9 @@ object Ann {
     * to (subspace, code, centroid) rows, so a scan fleet reopens the
     * index with [[readPq]] and never retrains. Two artifacts under one
     * `path`, written atomically enough for the usual overwrite-then-read
-    * deployment (a production store would version the directory).
+    * deployment (a production store would version the directory). The
+    * `PQ_FORMAT` marker is the last write, stamped only after both
+    * artifacts land (as [[writeIvf]] stamps `IVF_FORMAT`).
     */
   def writePq(index: PqIndex, path: String,
               idCol: String = "vec_id"): Unit = {
@@ -1195,6 +1197,9 @@ object Ann {
     }.toSeq.toDF("subspace", "code", "centroid")
       .coalesce(1) // m × ks tiny rows — one file
       .write.mode("overwrite").parquet(s"$path/codebooks")
+    val marker = new org.apache.hadoop.fs.Path(path, "PQ_FORMAT")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(marker, true).close()
   }
 
   /** Reload a persisted PQ index. The codebook table is driver-sized

@@ -105,6 +105,61 @@ class VectorDbServerSpec extends SparkSpec {
     }
   }
 
+  test("a Convert-written store takes /add_documents and keeps one schema: " +
+    "/stats and /query stay 200, foreign columns and uncastable values 400") {
+    val repo = Files.createTempDirectory("graft_vdb_conv_src").toFile
+    def put(rel: String, content: String): Unit = {
+      val f = new java.io.File(repo, rel)
+      f.getParentFile.mkdirs()
+      Files.writeString(f.toPath, content)
+    }
+    put("src/main.py", "def main():\n    return 42\n" * 30)
+    put("README.md", "# sample project\nwith docs")
+    val store = Files.createTempDirectory("graft_vdb_conv").toString + "/store"
+    Convert.run(spark, repo.getAbsolutePath, store)
+    val base = spark.read.parquet(store).count()
+    val db = new VectorDb(spark, store)
+    val srv = new VectorDbServer(spark, db)
+    srv.start()
+    try {
+      val port = srv.boundPort
+      // the wire types differ from Convert's: embedding array<double>,
+      // counts bigint, ingested_at an ISO string; `size` is absent
+      val docsJson = Ingest.ingestDocuments(
+        Seq(("a.md", ".md", "the quick brown fox jumps over the lazy dog"),
+            ("b.py", ".py", "vector database query runner main loop"))
+          .toDF("path", "extension", "text"), "text")
+        .toJSON.collect().mkString("[", ",", "]")
+      val add = post(port, "/add_documents", s"""{"documents": $docsJson}""")
+      assert(add.statusCode() == 200, add.body())
+      val added = parse(add.body()).head().getAs[Long]("added")
+      assert(added > 0L)
+
+      val st = get(port, "/stats")
+      assert(st.statusCode() == 200, st.body())
+      assert(parse(st.body()).head().getAs[Long]("total_documents") == base + added)
+      val stored = parse(docsJson).selectExpr("embedding").head()
+      val q = post(port, "/query",
+        s"""{"query_embedding": [${stored.getSeq[Any](0).mkString(",")}], "top_k": 3}""")
+      assert(q.statusCode() == 200, q.body())
+      val fileSchemas = new java.io.File(store).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => spark.read.parquet(f.getPath).schema).distinct
+      assert(fileSchemas.length == 1, fileSchemas.mkString("\n"))
+
+      val foreign = post(port, "/add_documents",
+        """{"documents": [{"content": "x", "embedding": [1.0], "color": "red"}]}""")
+      assert(foreign.statusCode() == 400 && foreign.body().contains("color"),
+        foreign.body())
+      val uncastable = post(port, "/add_documents",
+        """{"documents": [{"content": "x", "embedding": [1.0], "chunk_index": "seven"}]}""")
+      assert(uncastable.statusCode() == 400 && uncastable.body().contains("chunk_index"),
+        uncastable.body())
+      assert(parse(get(port, "/stats").body()).head()
+        .getAs[Long]("total_documents") == base + added)
+    } finally srv.stop()
+  }
+
   test("/health stays responsive while slow requests occupy the pool") {
     withServer { (port, _) =>
       // three concurrent slow-ish requests (each runs a Spark job) must

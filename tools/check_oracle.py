@@ -2,7 +2,8 @@
 """Local stand-in for the driver's correctness gate: for each query result
 parquet written by graft.Verify, run the corresponding oracle SQL in DuckDB
 over the same sf tables and compare (rows sorted, columns sorted by name,
-values hashed). Usage: check_oracle.py <sfDir> <verifyOutDir>
+values hashed). Every oracle_sql.json key without a result dir counts
+as a failure. Usage: check_oracle.py <sfDir> <verifyOutDir>
 """
 import sys, json, glob, os
 import duckdb
@@ -69,6 +70,13 @@ def main(sf_dir, out_dir):
         if status != "OK":
             fails += 1
         print(f"  {name}: {status}")
+    # an oracled query that threw leaves no result dir (Verify deletes
+    # each dir before running its query): that is a failure, not a skip
+    missing = sorted(k for k in oracle if not os.path.isdir(os.path.join(out_dir, k)))
+    for name in missing:
+        print(f"  {name}: MISSING result dir")
+    print(f"{len(missing)} missing result dirs")
+    fails += len(missing)
     print(("ALL OK" if fails == 0 else f"{fails} FAILURES"))
     return fails
 
